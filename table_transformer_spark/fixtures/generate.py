@@ -285,11 +285,6 @@ def encode_page_payload(page: dict) -> bytes:
         json.dumps(page, sort_keys=True, allow_nan=False).encode())
 
 
-def decode_page_payload(payload: bytes) -> dict:
-    from ..serde import decode_zlib_json
-    return decode_zlib_json(payload)
-
-
 # ---------------------------------------------------------------------------
 # document corpus
 # ---------------------------------------------------------------------------

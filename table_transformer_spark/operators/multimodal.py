@@ -47,10 +47,6 @@ except ImportError:
 _FIXTURE_MAGIC = b"\x78"  # zlib header byte of the fixture payloads
 
 
-def _decode_fixture(payload: bytes) -> dict:
-    return decode_zlib_json(payload)
-
-
 def _decode_image(payload: bytes) -> dict:
     """Decode a media payload to {width, height, mode}.
 
@@ -62,7 +58,7 @@ def _decode_image(payload: bytes) -> dict:
     """
     b = bytes(payload)
     if b[:1] == _FIXTURE_MAGIC:
-        page = _decode_fixture(b)
+        page = decode_zlib_json(b)
         return {"width": int(page["width"]), "height": int(page["height"]),
                 "mode": "fixture"}
     if not _HAS_PIL:

@@ -1,14 +1,11 @@
 """Fused per-page extraction stage: payload → cell rows in ONE
 Arrow-batched pass.
 
-The staged pipeline (``stages.py``) demonstrates the operator algebra —
-decode / detect / crop / recognize / cells as separate DataFrame
-transforms.  At scale, those per-page-local steps pay three extra
-Python↔JVM Arrow boundaries for data (token arrays, object arrays) that
-never leaves the page row.  This fused stage performs the identical
-operations (same functions, same order, same semantics — equality is
-pytest-enforced against the staged path) inside a single
-``mapInPandas``, so a page is touched exactly once per executor:
+Decode / detect / crop / recognize / cells are all page-local: the token
+and object arrays never leave the page row.  Running them as separate
+DataFrame transforms would pay three extra Python↔JVM Arrow boundaries
+for that data (~3× throughput), so they run inside a single
+``mapInPandas`` and a page is touched exactly once per executor:
 
     pages(payload) ──mapInPandas──▶ cells            [zero shuffle]
 
@@ -25,7 +22,6 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-
 from pyspark.sql import functions as F
 
 from ..config import (
@@ -35,8 +31,7 @@ from ..config import (
 )
 from ..geometry import np_iob_matrix
 from ..kernels.structure import objects_to_cells
-from . import schemas
-from .stages import _decode_payload
+from ..serde import decode_zlib_json
 
 # packed per-table row: cells travel as one array column through Arrow
 # (≈16× fewer Python→JVM rows than per-cell emission) and explode
@@ -50,13 +45,16 @@ _PACKED_SCHEMA = (
 )
 
 
-def make_fused_page_fn(mode: str = "clean",
-                       padding: int = DEFAULT_CROP_PADDING):
+def make_fused_page_fn(mode: str = "clean"):
     """Factory: (doc_id, media_ref, page_offset, payload) batches →
-    CELL_SCHEMA batches.  Same operation order as the staged path:
+    packed per-table batches (``_PACKED_SCHEMA``).  Operation order:
     detect-threshold → crop/pad → token containment-assign + rebase →
     structure inference (stub) → objects_to_cells kernel → (min row,
-    min col) cell ordering."""
+    min col) cell ordering.  ``mode`` picks the designed ("clean") or
+    perturbed ("noisy") structure; any other value raises ValueError."""
+    if mode not in ("clean", "noisy"):
+        raise ValueError(f"mode must be 'clean' or 'noisy', got {mode!r}")
+    padding = DEFAULT_CROP_PADDING
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # <-- detection + structure models would be loaded once here -->
@@ -66,7 +64,7 @@ def make_fused_page_fn(mode: str = "clean",
             for doc_id, media_ref, page_offset, payload in zip(
                     pdf["doc_id"], pdf["media_ref"], pdf["page_offset"],
                     pdf["payload"]):
-                page = _decode_payload(payload)
+                page = decode_zlib_json(payload)
                 # page tokens are filtered against every table crop —
                 # build their bbox matrix once and do each crop's
                 # iob filter as a single vector op (the scalar loop was
