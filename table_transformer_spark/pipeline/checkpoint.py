@@ -14,13 +14,12 @@ Design:
   axis.  Skewed multi-table docs spread across buckets by construction
   since bucketing ignores content; *within* a bucket, AQE handles
   residual skew.
-* buckets are processed in groups; each group is one Spark job writing
-  ``out/cells/bucket=<b>/`` and appending one status row per bucket to
-  the status table (parquet-backed here; the schema is the Iceberg
-  ``extraction_status`` table of FIXTURES.md §6).
-* on restart, completed buckets for the same corpus are anti-joined
-  away — only incomplete buckets re-run.  Output writes are idempotent
-  (dynamic overwrite per bucket directory).
+* buckets are processed in groups; each group is one Spark write job
+  into ``out/spans/grp=<...>/bucket=<b>/`` that also observes each
+  bucket's ``n_docs``/``n_spans``, then appends one status row per bucket
+  (schema ``schemas.STATUS_SCHEMA``; ``wall_sec`` covers the write job).
+* on restart only incomplete buckets re-run; output writes are
+  idempotent (static overwrite per ``grp=`` directory).
 """
 
 from __future__ import annotations
@@ -28,13 +27,15 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .extract import extract
+from .schemas import STATUS_SCHEMA
 
-STATUS_COLUMNS = ["bucket", "state", "n_docs", "n_spans", "run_id",
-                  "wall_sec", "updated_at"]
+STATUS_COLUMNS = STATUS_SCHEMA.fieldNames()
 
 
 def _group_dir(spans_dir: str, group: list[int]) -> str:
@@ -68,9 +69,12 @@ def bucketed(documents: DataFrame, n_buckets: int) -> DataFrame:
 
 def completed_buckets(spark: SparkSession, status_dir: str) -> set[int]:
     try:
-        status = spark.read.parquet(status_dir)
-    except Exception:
-        return set()
+        status = spark.read.schema(STATUS_SCHEMA).parquet(status_dir)
+    except AnalysisException as e:
+        # anything else (a corrupt file) must not read as "none done"
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return set()
+        raise
     rows = (status.filter(F.col("state") == "done")
             .select("bucket").distinct().collect())
     return {r.bucket for r in rows}
@@ -114,31 +118,26 @@ def run_checkpointed_extraction(spark: SparkSession,
 
         # ONE write job per group into its own grp=<...> directory
         # (static overwrite — dynamic partition overwrite pays a
-        # driver-serial commit).  Crash-safety: status rows land only
-        # after the group directory is fully written; _reconcile
-        # removed any partial directory from a crashed run before we
-        # started.
-        gdir = _group_dir(spans_dir, group)
+        # driver-serial commit), observing each bucket's counts: n_docs
+        # counts offset-0 rows, one per doc (observe rejects
+        # countDistinct).  Status rows land only after the directory is
+        # fully written; _reconcile removed any partial one beforehand.
+        lineage = Observation()
+        spans = spans.observe(lineage, *(
+            F.count(F.when((F.col("bucket") == b) & cond, 1))
+            .alias(f"{name}_{b}") for b in group
+            for name, cond in (("n_spans", F.lit(True)),
+                               ("n_docs", F.col("offset") == 0))))
         (spans.write.partitionBy("bucket").mode("overwrite")
-         .parquet(gdir))
-
-        # per-bucket lineage + metrics from the written output
-        stats = (spark.read.parquet(gdir)
-                 .groupBy("bucket")
-                 .agg(F.countDistinct("doc_id").alias("n_docs"),
-                      F.count(F.lit(1)).alias("n_spans"))
-                 .collect())
-        by_bucket = {r.bucket: r for r in stats}
+         .parquet(_group_dir(spans_dir, group)))
+        stats = lineage.get
         wall = round(time.perf_counter() - t0, 3)
         now = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        status_rows = [
-            (int(b),
-             "done",
-             int(by_bucket[b].n_docs) if b in by_bucket else 0,
-             int(by_bucket[b].n_spans) if b in by_bucket else 0,
-             run_id, wall, now)
-            for b in group]
-        (spark.createDataFrame(status_rows, STATUS_COLUMNS)
+        status = pd.DataFrame(
+            [(b, "done", stats[f"n_docs_{b}"], stats[f"n_spans_{b}"],
+              run_id, wall, now) for b in group], columns=STATUS_COLUMNS)
+        # pandas + declared schema → a local relation, no Python worker
+        (spark.createDataFrame(status, STATUS_SCHEMA)
          .coalesce(1).write.mode("append").parquet(status_dir))
 
         jobs_run += 1

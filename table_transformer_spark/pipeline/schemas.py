@@ -54,3 +54,16 @@ OUTPUT_SPANS_SCHEMA = T.StructType([
     T.StructField("media_ref", T.StringType(), False),
     T.StructField("offset", T.IntegerType(), False),
 ])
+
+# checkpoint status table (pipeline/checkpoint.py): one row per
+# committed bucket per run; appended by every run, so files written by
+# different runs must keep merging
+STATUS_SCHEMA = T.StructType([
+    T.StructField("bucket", T.LongType()),
+    T.StructField("state", T.StringType()),
+    T.StructField("n_docs", T.LongType()),
+    T.StructField("n_spans", T.LongType()),
+    T.StructField("run_id", T.StringType()),
+    T.StructField("wall_sec", T.DoubleType()),
+    T.StructField("updated_at", T.StringType()),
+])
