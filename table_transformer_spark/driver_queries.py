@@ -715,19 +715,19 @@ WHERE bit_count(xor(a.sig, b.sig)) <= 3
 
 def q_neardup_clusters(spark, sf_dir):
     """Near-dup cluster assignment: simhash pairs → connected
-    components (min-label propagation over DataFrame joins).  The
-    planted chain (-21..-24, path edges only) forces the labels to
-    propagate across 3 hops, so the oracle is non-vacuous for the
-    multi-round path, not just isolated pair edges."""
+    components (minimum reachable id).  The planted chain (-21..-24,
+    path edges only) puts a component minimum 3 hops from a member, so
+    the oracle is non-vacuous for multi-hop paths, not just isolated
+    pair edges."""
     from .operators.dedup import connected_components
     cc = connected_components(q_simhash_neardup_pairs(spark, sf_dir),
                               "doc1", "doc2")
     return cc.select(F.col("node").alias("doc_id"), "cluster_id")
 
 
-# min-reachable-id per node via a recursive CTE — the declarative twin
-# of the propagation loop (DuckDB enumerates reachable labels; the
-# GROUP BY min collapses them to the component representative)
+# min-reachable-id per node via a recursive CTE — the declarative
+# statement of connected_components (DuckDB enumerates reachable labels;
+# the GROUP BY min collapses them to the component representative)
 ORACLE_NEARDUP_CLUSTERS = f"""
 WITH RECURSIVE pairs AS ({ORACLE_SIMHASH_NEARDUP_PAIRS}),
 edges AS (

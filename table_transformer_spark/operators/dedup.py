@@ -17,14 +17,15 @@ Four families, all shuffle-conscious:
   Hamming distance inside blocks.
 
 Plus the resolution stage every pair-finder feeds: **connected
-components** over the pair graph (cluster ids via min-label
-propagation) and **canonical-document selection** (one keeper per
-cluster) — together they turn "these docs look alike" into "drop
-these rows", which is the actual deliverable of corpus dedup.
+components** over the pair graph (cluster id = minimum reachable id;
+union-find on the driver while the edges fit Spark's broadcast budget,
+large/small-star rounds above it) and **canonical-document selection**
+(one keeper per cluster) — together they turn "these docs look alike"
+into "drop these rows", which is the actual deliverable of corpus dedup.
 
 At 10^12-doc scale the explode→groupBy shuffles partition by token/
 shingle hash (uniform); banding keeps candidate sets tiny; blocks bound
-the quadratic step; the clustering loop only ever touches the pair
+the quadratic step; clustering only ever touches the pair
 relation, which is orders of magnitude smaller than the corpus.
 """
 
@@ -49,7 +50,6 @@ __all__ = [
     "simhash_udf",
     "simhash_neardup_pairs",
     "connected_components",
-    "connected_components_star",
     "keep_canonical",
     "dedup_survivors",
 ]
@@ -182,8 +182,7 @@ def minhash_band_buckets(df: DataFrame, id_col: str, text_col: str,
 def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
                         block_col: str, n: int = 2,
                         min_intersection: int = 3,
-                        max_df: int = 50,
-                        log_dropped: bool = False) -> DataFrame:
+                        max_df: int = 50) -> DataFrame:
     """Word n-gram Jaccard candidate pairs inside a blocking key.
 
     Output: (doc1, doc2, n_common, n_union, is_neardup) with exact
@@ -198,9 +197,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     O(n_grams · max_df²) — linear in corpus size for fixed ``max_df``.
     ``n_common`` therefore counts *rare* shared grams only (standard
     candidate-generation semantics for dedup); true near-dups share
-    many rare grams and still clear ``min_intersection``.  Set
-    ``log_dropped=True`` to count and log the dropped hot grams (runs
-    one extra aggregation job — keep off in benchmarks).
+    many rare grams and still clear ``min_intersection``.
     """
     # Shingling runs as an Arrow-batched Python kernel: Spark's
     # higher-order array functions (transform/zip_with) evaluate their
@@ -269,11 +266,6 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
                  .agg(F.count(F.lit(1)).alias("df"))
                  .filter(F.col("df") > max_df)
                  .select("block", "gram"))
-    if log_dropped:
-        import logging
-        logging.getLogger(__name__).info(
-            "ngram_jaccard_pairs: dropped %d hot grams (df > %d)",
-            hot_grams.count(), max_df)
     kept = (exploded
             .join(hot_grams, ["block", "gram"], "left_anti")
             .groupBy("block", "gram")
@@ -453,106 +445,91 @@ def simhash_neardup_pairs(df: DataFrame, id_col: str, text_col: str,
             .filter(F.col("hamming") <= max_hamming))
 
 
+# large/small-star round cap; a million-node path converges in about a
+# dozen rounds, so reaching it raises instead of returning partial labels
+_STAR_MAX_ROUNDS = 40
+
+
 def connected_components(pairs: DataFrame, src: str = "doc1",
-                         dst: str = "doc2",
-                         max_iter: int = 25) -> DataFrame:
+                         dst: str = "doc2") -> DataFrame:
     """Cluster assignment over a near-duplicate pair graph.
 
     Returns ``(node, cluster_id)`` for every node that appears in
     *pairs*, where ``cluster_id`` is the minimum node id reachable in
     the undirected graph — the standard canonical component label.
-    Degenerate self-pairs (a pair-finder never emits them) are
-    ignored, here and in :func:`connected_components_star`.
+    Both columns keep the input id type.  Self-pairs and pairs with a
+    NULL end (a pair-finder never emits them) are ignored.
 
-    **Algorithm**: min-label propagation as a driver-side loop of
-    DataFrame joins.  Each round every node adopts
-    ``min(own label, neighbours' labels)``; labels converge in
-    O(graph diameter) rounds.  Near-dup components are shallow by
-    construction (an article and its mirrors all pair with each
-    other), so the round count is small and independent of corpus
-    size.  Each round costs two node-id equi-joins and one groupBy —
-    all over the PAIR relation, which is orders of magnitude smaller
-    than the corpus, so the loop never rescans documents.  For
-    adversarially deep graphs use
-    :func:`connected_components_star` (O(log²) rounds); the simple
-    propagation is the default because dedup graphs don't exhibit
-    long paths at any scale.
+    The edges are normalized once — oriented ``(greatest, least)``,
+    self-pairs dropped, ``distinct`` — and checkpointed, so the
+    upstream pair-finding (LSH joins, simhash kernels) runs exactly
+    once.  Where the labels are computed depends on the edge count:
 
-    Lineage is truncated with ``localCheckpoint`` every round
-    (iterative joins otherwise stack an unbounded plan and re-execute
-    prior rounds); the input edge relation is checkpointed once so
-    upstream pair-finding (LSH joins, simhash kernels) runs a single
-    time no matter how many rounds follow.  Raises ``RuntimeError``
-    after *max_iter* rounds rather than returning partial labels.
+    - **driver**: when the edge relation fits the byte budget Spark
+      itself uses for relations it ships through the driver
+      (``spark.sql.autoBroadcastJoinThreshold``, at Spark's own per-row
+      size estimate), the edges are collected and labelled by
+      union-find (union-by-min, path halving) in one pass instead of
+      a chain of Spark jobs;
+    - **cluster**: otherwise (or when the threshold is ≤ 0)
+      large-star/small-star rounds over DataFrames (:func:`_star`),
+      the path for graphs past the driver budget.
     """
-    e = (pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-         .filter(F.col("a") != F.col("b")))
-    # eager=False on the edge checkpoint: the eager label-init job
-    # below materializes it as a side effect, so the loop setup costs
-    # ONE driver-blocking job instead of two; every round still reads
-    # the persisted edge blocks, never the upstream pair pipeline
-    sym = (e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-           .distinct()
-           .localCheckpoint(eager=False))
-    # init fused with round 1: with every label starting as its own
-    # node id, the first propagation round computes exactly
-    # least(node, min(neighbour ids)) — so seed the loop with that
-    # aggregate directly (one groupBy over the checkpointed edges, no
-    # join) and save a full join+checkpoint round every run
-    labels = (sym.groupBy("a").agg(F.min("b").alias("nbr0"))
-              .select(F.col("a").alias("node"),
-                      F.least(F.col("a"), F.col("nbr0")).alias("label"))
-              .localCheckpoint(eager=True))
-    def _step(lbl):
-        """One min-label propagation step (same relation shape in and
-        out: (node, label) plus any carried columns)."""
-        nbr = (sym.join(lbl.select(F.col("node").alias("b"),
-                                   F.col("label").alias("b_label")), "b")
-               .groupBy("a").agg(F.min("b_label").alias("nbr_label")))
-        return (lbl
-                .join(nbr.select(F.col("a").alias("node"), "nbr_label"),
-                      "node", "left")
-                .withColumn("label",
-                            F.least(F.col("label"),
-                                    F.coalesce("nbr_label", "label")))
-                .drop("nbr_label"))
-
-    for _ in range(max_iter):
-        # TWO propagation steps per checkpointed round: the per-round
-        # fixed cost (checkpoint job + convergence scan) dominates the
-        # tiny-relation joins, so composing two steps into one job
-        # halves the round count for the same reachability growth.
-        # The original label rides along as label0, so the convergence
-        # check still compares across the whole round on materialized
-        # data — no extra join or shuffle.
-        merged = (_step(_step(
-            labels.withColumn("label0", F.col("label"))))
-            .localCheckpoint(eager=True))
-        # labels only ever decrease ⇒ strictly-less ⇔ changed
-        changed = (merged.filter(F.col("label") < F.col("label0"))
-                   .limit(1).count())
-        labels = merged.select("node", "label")
-        if changed == 0:
-            return labels.select("node", F.col("label").alias("cluster_id"))
-    raise RuntimeError(
-        f"connected_components: no convergence after {max_iter} rounds — "
-        "the pair graph has a path longer than expected for near-dup "
-        "data; raise max_iter or use connected_components_star")
+    e = (pairs.select(F.greatest(src, dst).alias("u"),
+                      F.least(src, dst).alias("v"))
+         # greatest/least skip a NULL end, so those pairs land here too
+         .filter(F.col("u") != F.col("v"))
+         .distinct()
+         .localCheckpoint(eager=True))
+    spark = e.sparkSession
+    budget = (spark._jsparkSession.sessionState().conf()
+              .autoBroadcastJoinThreshold())
+    # EstimationUtils.getSizePerRow: 8 bytes of row overhead plus each
+    # column's default size — what the planner compares with the budget
+    bound = budget // (8 + e._jdf.schema().defaultSize())
+    if bound > 0:
+        edges = e.limit(bound + 1).collect()
+        if len(edges) <= bound:
+            id_type = e.schema["u"].dataType
+            # from pandas, not a list: Arrow builds a LocalRelation with
+            # exact size stats, where a list goes through a Python-worker
+            # RDD of unknown size
+            return spark.createDataFrame(
+                pd.DataFrame(_union_find(edges),
+                             columns=["node", "cluster_id"]),
+                T.StructType([T.StructField("node", id_type),
+                              T.StructField("cluster_id", id_type)]))
+    return _star(e)
 
 
-def connected_components_star(pairs: DataFrame, src: str = "doc1",
-                              dst: str = "doc2",
-                              max_iter: int = 40) -> DataFrame:
-    """:func:`connected_components` for adversarially DEEP pair
-    graphs: alternating large-star/small-star (Kiveris et al.,
-    *Connected Components in MapReduce and Beyond*, SoCC'14).
+def _union_find(edges) -> list:
+    """``(node, min reachable node)`` for the endpoints of *edges*.
+    Python orders ``str`` by code point, the same order as Spark's
+    UTF-8 byte comparison, so string ids get Spark's ``min``."""
+    parent = {}
 
-    Same ``(node, cluster_id)`` contract and the same per-round cost
-    shape (one groupBy + one join over the edge relation), but
-    convergence in O(log²) rounds instead of O(diameter): a
-    million-node path labels in ~a dozen rounds where propagation
-    needs a million.  Each round REWRITES the edge set instead of
-    carrying a separate label relation:
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in edges:
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return [(x, find(x)) for x in parent]
+
+
+def _star(e: DataFrame) -> DataFrame:
+    """Alternating large-star/small-star (Kiveris et al., *Connected
+    Components in MapReduce and Beyond*, SoCC'14) over the
+    checkpointed ``(u, v)``, ``u > v`` edges of
+    :func:`connected_components`.
+
+    Convergence in O(log² n) rounds.  Each round REWRITES the edge
+    set:
 
     - **large-star**: per node u with m = min(N(u) ∪ {u}), replace
       every edge to a LARGER neighbour v > u with (v, m) — far ends
@@ -566,19 +543,11 @@ def connected_components_star(pairs: DataFrame, src: str = "doc1",
     via (count, hash-sum) of the edge set — a local scan, no extra
     shuffle (the astronomically-unlikely hash-sum collision costs one
     extra no-op round, never a wrong answer, because a fixpoint stays
-    a fixpoint).  Preferred over propagation only when depth is
-    actually expected: its constant factor is ~2× per round and it
-    shuffles edges rather than labels.
+    a fixpoint).  Raises ``RuntimeError`` after ``_STAR_MAX_ROUNDS``
+    rounds rather than returning partial labels.
     """
-    e = (pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-         .filter(F.col("u") != F.col("v")))
-    # orient every edge large→small so both phases group on "u"
-    e = (e.select(F.greatest("u", "v").alias("u"),
-                  F.least("u", "v").alias("v"))
-         .distinct()
-         .localCheckpoint(eager=True))
     prev_sig = None
-    for _ in range(max_iter):
+    for _ in range(_STAR_MAX_ROUNDS):
         # --- large-star over the symmetrized edges -------------------
         sym = e.union(e.select(F.col("v").alias("u"),
                                F.col("u").alias("v")))
@@ -618,9 +587,8 @@ def connected_components_star(pairs: DataFrame, src: str = "doc1",
                     .union(roots).distinct())
         prev_sig = sig
     raise RuntimeError(
-        f"connected_components_star: no convergence after {max_iter} "
-        "rounds (O(log² n) expected — check for id-type overflow or "
-        "raise max_iter)")
+        f"connected_components: no convergence after {_STAR_MAX_ROUNDS} "
+        "large/small-star rounds (O(log² n) expected)")
 
 
 def keep_canonical(docs: DataFrame, clusters: DataFrame,

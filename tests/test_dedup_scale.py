@@ -8,6 +8,7 @@
 * LSH band keys are parameterized (bits/bands) with bucket telemetry.
 """
 
+import contextlib
 import itertools
 
 import pandas as pd
@@ -560,8 +561,36 @@ def test_emit_topk_partition_selection_matches_stable_sort():
 # ---------------------------------------------------------------------------
 
 
+# spark.sql.autoBroadcastJoinThreshold per connected_components branch
+BRANCHES = {"driver": None, "star": "-1"}
+
+
+@contextlib.contextmanager
+def broadcast_threshold(spark, value):
+    """Pick the connected_components branch through Spark's own
+    broadcast budget: ``"-1"`` forces large/small-star; ``None`` is
+    Spark's default, which keeps every graph here on the driver."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    if value is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def cc_labels(spark, edges, threshold):
+    from table_transformer_spark.operators.dedup import connected_components
+    with broadcast_threshold(spark, threshold):
+        return {(r.node, r.cluster_id)
+                for r in connected_components(edges).collect()}
+
+
 def test_connected_components_multi_hop_path(spark):
-    # path 4-3-2-1 (min at one end: 3 propagation hops) + isolated pair
+    # path 4-3-2-1 (min at one end, 3 hops away) + isolated pair
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], "doc1 long, doc2 long")
     from table_transformer_spark.operators.dedup import connected_components
@@ -582,14 +611,16 @@ def test_connected_components_merges_components(spark):
     assert len(labels) == 6
 
 
-def test_connected_components_raises_without_convergence(spark):
-    # a 5-node path needs >1 round; max_iter=1 must refuse, not return
-    # partial labels
+def test_connected_components_raises_without_convergence(spark,
+                                                        monkeypatch):
+    # large/small-star needs two rounds to see its fixpoint; a one-round
+    # cap must refuse, not return partial labels
+    from table_transformer_spark.operators import dedup
+    monkeypatch.setattr(dedup, "_STAR_MAX_ROUNDS", 1)
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5)], "doc1 long, doc2 long")
-    from table_transformer_spark.operators.dedup import connected_components
     with pytest.raises(RuntimeError, match="no convergence"):
-        connected_components(edges, max_iter=1)
+        cc_labels(spark, edges, BRANCHES["star"])
 
 
 def test_keep_canonical_quality_then_min_id(spark):
@@ -611,30 +642,18 @@ def test_keep_canonical_quality_then_min_id(spark):
     assert got == {(1, 2, 3), (10, 10, 2)}
 
 
-def test_connected_components_star_deep_path(spark):
-    # a 200-node path has diameter 199: propagation at its default 25
-    # rounds must refuse; the star variant labels it in O(log²) rounds
-    from table_transformer_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+def test_connected_components_deep_path_both_branches(spark):
+    # a 200-node path has diameter 199; both branches label it whole
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "doc1 long, doc2 long")
-    with pytest.raises(RuntimeError, match="no convergence"):
-        connected_components(edges)
-    labels = {r.node: r.cluster_id
-              for r in connected_components_star(edges).collect()}
-    assert len(labels) == 201
-    assert set(labels.values()) == {0}
+    want = {(i, 0) for i in range(201)}
+    for branch, threshold in BRANCHES.items():
+        assert cc_labels(spark, edges, threshold) == want, branch
 
 
-def test_connected_components_star_matches_propagation(spark):
+def test_connected_components_driver_matches_star(spark):
     import random
 
-    from table_transformer_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
     rng = random.Random(7)
     # 30 shallow blobs of 2-6 nodes each, ids shuffled so component
     # minima land on arbitrary positions
@@ -648,29 +667,74 @@ def test_connected_components_star_matches_propagation(spark):
                   for j in range(1, len(blob))]
         i += size
     df = spark.createDataFrame(edges, "doc1 long, doc2 long")
-    prop = {(r.node, r.cluster_id)
-            for r in connected_components(df).collect()}
-    star = {(r.node, r.cluster_id)
-            for r in connected_components_star(df).collect()}
-    assert prop == star
+    assert (cc_labels(spark, df, BRANCHES["driver"])
+            == cc_labels(spark, df, BRANCHES["star"]))
 
 
 def test_connected_components_ignore_self_pairs(spark):
-    # degenerate self-pairs never come from a pair-finder; both
-    # variants must ignore them identically rather than inventing
+    # degenerate self-pairs and NULL ends never come from a
+    # pair-finder; both branches must ignore them rather than invent
     # singleton clusters
-    from table_transformer_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
     edges = spark.createDataFrame(
-        [(7, 7), (1, 2), (2, 2)], "doc1 long, doc2 long")
-    want = {(1, 1), (2, 1)}
-    got_p = {(r.node, r.cluster_id)
-             for r in connected_components(edges).collect()}
-    got_s = {(r.node, r.cluster_id)
-             for r in connected_components_star(edges).collect()}
-    assert got_p == want and got_s == want
+        [(7, 7), (1, 2), (2, 2), (3, None), (None, None)],
+        "doc1 long, doc2 long")
+    for branch, threshold in BRANCHES.items():
+        assert cc_labels(spark, edges, threshold) == {(1, 1), (2, 1)}, \
+            branch
+
+
+def test_connected_components_branch_types_and_string_min(spark,
+                                                          monkeypatch):
+    from table_transformer_spark.operators import dedup
+    calls = []
+    star = dedup._star
+    monkeypatch.setattr(dedup, "_star",
+                        lambda e: calls.append(1) or star(e))
+    # component minima under Spark's UTF-8 byte order: "z" < "é", and
+    # U+FF21 < U+1F600 (UTF-16 code units would order them the other
+    # way round)
+    comps = {"long": [[5, 9, 7], [40, 12]],
+             "string": [["é", "z", "b"], ["\U0001F600", "\uff21"]]}
+    for id_type, groups in comps.items():
+        edges = spark.createDataFrame(
+            [(g[j], g[j + 1]) for g in groups for j in range(len(g) - 1)],
+            f"doc1 {id_type}, doc2 {id_type}")
+        members = spark.createDataFrame(
+            [(n, k) for k, g in enumerate(groups) for n in g],
+            f"node {id_type}, comp int")
+        spark_min = {r.node: r.mn for r in members.join(
+            members.groupBy("comp").agg(F.min("node").alias("mn")),
+            "comp").collect()}
+        for branch, threshold in BRANCHES.items():
+            calls.clear()
+            with broadcast_threshold(spark, threshold):
+                cc = dedup.connected_components(edges)
+                got = {r.node: r.cluster_id for r in cc.collect()}
+            want_type = edges.schema["doc1"].dataType
+            assert [(f.name, f.dataType) for f in cc.schema.fields] == [
+                ("node", want_type), ("cluster_id", want_type)]
+            assert got == spark_min, (id_type, branch)
+            assert bool(calls) == (branch == "star"), (id_type, branch)
+
+
+def test_connected_components_runs_pairs_once(spark):
+    # the pair relation feeds the edge checkpoint only: its rows are
+    # computed once on either branch, however many jobs follow
+    seen = spark.sparkContext.accumulator(0)
+
+    def tap(x):
+        seen.add(1)
+        return x
+
+    tap_udf = F.udf(tap, "long").asNondeterministic()
+    base = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)] + [(100, 101)],
+        "doc1 long, doc2 long")
+    pairs = base.select(tap_udf("doc1").alias("doc1"), "doc2")
+    for branch, threshold in BRANCHES.items():
+        before = seen.value
+        assert len(cc_labels(spark, pairs, threshold)) == 33, branch
+        assert seen.value - before == base.count(), branch
 
 
 def test_dedup_survivors_keeps_keepers_and_unclustered(spark):
